@@ -23,6 +23,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipetree_spark.jvm import hadoop_fs
+
 _FORMAT_VERSION = "1"
 
 #: per-(process, namespace) private artifact roots — see process_cache_root
@@ -79,17 +81,8 @@ class ArtifactCache:
     def path(self, stage: str, key: str) -> str:
         return f"{self.root}/{stage}/{key}"
 
-    # -- Hadoop FS plumbing (works for file:// and s3a:// alike) ---------
-    @staticmethod
-    def _fs(spark: SparkSession, path: str):
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(hconf), jpath
-
     def has(self, spark: SparkSession, stage: str, key: str) -> bool:
-        fs, _ = self._fs(spark, self.path(stage, key))
-        marker = spark._jvm.org.apache.hadoop.fs.Path(self.path(stage, key) + "/_SUCCESS")
+        fs, marker = hadoop_fs(spark, self.path(stage, key) + "/_SUCCESS")
         return bool(fs.exists(marker))
 
     def load(self, spark: SparkSession, stage: str, key: str) -> DataFrame:

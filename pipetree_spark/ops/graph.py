@@ -12,9 +12,9 @@ Scale notes (100 TB discipline):
 - Label propagation converges in O(max component diameter) rounds;
   near-dup graphs are overwhelmingly tiny star/clique components, so
   3-5 rounds are typical regardless of corpus size.
-- ``localCheckpoint`` truncates the lineage each round — without it the
+- a pin (``jvm.pin``) truncates the lineage each round — without it the
   plan doubles per iteration and the driver OOMs on plan bytes long
-  before data is a problem.
+  before data is a problem — and releases the state it supersedes.
 - Each round shuffles |edges| + |nodes| rows on node id; no
   driver-side collection of labels ever happens.
 
@@ -27,87 +27,57 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pipetree_spark.jvm import pin, release
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    check_every: int = 3,
     jump_after: int = 4,
 ) -> DataFrame:
     """Min-label connected components over an undirected edge list.
 
     Returns ``(node, component)`` where ``component`` is the smallest
     node id reachable from ``node`` — a deterministic canonical label.
-
     Every node that appears in ``edges`` is labeled (isolated nodes
     aren't known to an edge list; callers union them in if needed).
 
     Raises ``RuntimeError`` if ``max_iter`` rounds pass while labels are
-    still changing (component diameter > max_iter): silently returning
-    half-propagated labels would split one real component into several.
+    still changing: silently returning half-propagated labels would
+    split one real component into several.
 
-    Convergence checking is FREE (r15, guide §1.2/§7.3): the
-    changed-labels count rides the round's checkpoint materialization
-    as a ``DataFrame.observe`` metric (one CollectMetrics node in the
-    already-running job), so it costs zero extra jobs and zero extra
-    passes — the r12 amortization (``check_every``) existed to dodge a
-    separate count job per round; with the count folded into the round
-    itself, checking EVERY round is strictly cheaper than running even
-    one unneeded extra round (each round is a full |edges|+|nodes|
-    shuffle; the metric is a per-task counter). ``check_every`` is
-    kept for API compatibility and ignored. The round-r comparison
-    ``component < __own`` measures exactly whether one more round
-    would change anything, so the final check doubles as the FIXPOINT
-    ASSERTION, as before.
+    Each round is ONE shuffle job. The old label rides the same tagged
+    union as the neighbor labels, so ``min(component)`` and
+    ``min(__own)`` come out of one groupBy, and the changed-labels count
+    (``component < __own``: exactly "would one more round change
+    anything") rides the round's pin as a ``DataFrame.observe`` metric —
+    zero extra jobs, and on the final round it is the FIXPOINT
+    ASSERTION. ``sym`` is partitioned on the join key once, before its
+    pin, so each round's neighbor join exchanges only the |nodes|-sized
+    label side. Round 0 needs no join: with identity labels it is one
+    groupBy, ``component = least(u, min(v))``.
 
-    Per-round cost (r6 rewrite — was the slowest op in the suite at
-    11.6 s sf0.1): ONE shuffle job per round. The old label rides the
-    same tagged union the neighbor labels do, so ``min(component)`` and
-    ``min(__own)`` come out of one groupBy and "did anything change?"
-    is a filter on the already-materialized checkpoint — the previous
-    version burned a second full join + shuffle per round just to
-    detect convergence. ``sym`` is pre-partitioned on the join key
-    once (before its checkpoint), so each round's neighbor join
-    exchanges only the (|nodes|-sized) label side, never the
-    (2|edges|-sized) edge side.
-
-    Adaptive pointer-jumping (``jump_after``): plain min-label
-    propagation converges in O(component diameter) rounds — fine for
-    the star/clique components near-dup graphs actually produce (2-4
-    rounds), fatal for chain-shaped components (A≈B≈C≈… boilerplate
-    drift), which would exhaust ``max_iter`` at diameter > 25. From
-    round ``jump_after`` on, each round additionally contracts
-    ``label ← label[label]`` — since r15 fused into the SAME round
-    plan and checkpoint (the aggregate subtree appears on both sides
-    of the self-join; AQE's ReusedExchange materializes it once), so
-    jump rounds cost one materialization, not two. Doubling the
-    distance a label travels per round gives O(log diameter) rounds
-    overall. Cheap graphs never pay (they converge before the
-    escalation kicks in); a converged labeling is a fixed point of the
-    jump, so the convergence contract is unchanged. ``jump_after=None``
-    disables escalation.
-
-    r15 round-0 fusion (guide §2.4): with identity initial labels the
-    first round's neighbor join is the edge list itself (label(v) = v),
-    so round 0 is ONE groupBy over the pre-partitioned edge frame —
-    ``component = least(u, min(v))`` — instead of distinct + join +
-    union + groupBy (two exchanges and the init frame gone). The sym
-    build itself also drops an exchange: dedup runs as
-    ``dropDuplicates`` ON TOP of the hash(v) repartition (equal (u,v)
-    rows share a v, so hashpartitioning(v) already satisfies the
-    aggregation's clustered distribution — no second exchange).
+    Adaptive pointer-jumping (``jump_after``): min-label propagation
+    converges in O(component diameter) rounds — fine for the
+    star/clique components near-dup graphs produce, fatal for
+    chain-shaped ones (A≈B≈C≈… boilerplate drift). From round
+    ``jump_after`` on, each round also contracts ``label ← label[label]``
+    inside the same plan and pin (AQE's ReusedExchange materializes the
+    shared aggregate once), for O(log diameter) rounds overall. A
+    converged labeling is a fixed point of the jump, so the contract is
+    unchanged; ``jump_after=None`` disables it.
     """
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    # partition by v ONCE: localCheckpoint preserves partitioning, so
+    # partition by v ONCE: a pin preserves partitioning, so
     # every round's join on v reuses it (labels side alone shuffles).
     # dropDuplicates AFTER the repartition: hashpartitioning(v)
     # satisfies ClusteredDistribution(u, v), so the dedup aggregation
     # adds no exchange of its own (plan: 1 exchange, was 2).
-    sym = sym.repartition("v").dropDuplicates(["u", "v"]).localCheckpoint(eager=True)
+    sym = pin(sym.repartition("v").dropDuplicates(["u", "v"]))
 
     own_sql = sym.schema["u"].dataType.simpleString()
 
@@ -156,19 +126,25 @@ def connected_components(
             new_labels = new_labels.join(lk, F.expr("component = __cu")).selectExpr(
                 "u", "__cc AS component", "__own"
             )
-        # the changed-labels count rides the checkpoint job as an
+        # the changed-labels count rides the pin's job as an
         # observe metric — zero extra jobs; a label changed iff the new
         # min beat the old one. On the final round this IS the fixpoint
         # assertion. (sum over an empty frame observes NULL → 0.)
         obs = Observation()
-        new_labels = new_labels.observe(
-            obs, F.expr("sum(cast((component < __own) as int)) AS changed")
-        ).localCheckpoint(eager=True)
+        new_labels = pin(
+            new_labels.observe(
+                obs, F.expr("sum(cast((component < __own) as int)) AS changed")
+            ),
+            replaces=(labels,),
+        )
         labels = new_labels.drop("__own")
         if not obs.get["changed"]:
             converged = True
             break
+    release(sym)
     if not converged:
+        if labels is not None:  # max_iter < 1 runs no round
+            release(labels)
         raise RuntimeError(
             f"connected_components did not converge in max_iter={max_iter} rounds "
             "(component diameter exceeds max_iter); raise max_iter"
@@ -198,75 +174,56 @@ def pagerank_exact(
     policy. Mass lost to floors is deterministic too.
 
     Scale: per iteration ONE shuffle of |edges| contributions on dst
-    (the rank side joins src via the pre-partitioned edge checkpoint —
-    the CC trick above); the dangling total rides the round checkpoint
-    as an observe metric and re-enters as a driver literal; ranks
-    localCheckpoint per round to cut lineage. O(iters) rounds, no
-    driver-side data beyond the node count. Returns (node, rank).
+    (the rank side joins src via the pre-partitioned edge pin — the CC
+    trick above); the dangling total rides the round pin as an observe
+    metric and re-enters as a driver literal; ranks are pinned per
+    round to cut lineage. O(iters) rounds, no driver-side data beyond
+    the node count. Returns (node, rank).
 
-    r15 round-body re-plan (guide §2.3/§2.4): the dangling mass used to
-    be a per-round ``dangling ⋈ ranks`` join and the new-rank join used
-    the unpartitioned ``nodes`` frame — two |nodes|-sized exchanges per
-    round that carry no information the rank frame doesn't already
-    hold. Now a ``__dang`` FLAG rides the rank frame (computed once
+    The rank frame carries an immutable ``__dang`` flag (computed once
     from the degree table), so the dangling total is a filter+sum over
-    the already-materialized checkpoint, and the new-rank join keys on
-    the rank frame itself — its checkpoint preserves the previous
-    round's hashpartitioning(node), and inflow arrives partitioned by
-    dst ≡ node, so from round 2 on the join is exchange-free. Same
-    integer arithmetic, bit-identical ranks.
+    the materialized pin, and the new-rank join keys on the rank frame
+    itself: its pin keeps the previous round's hashpartitioning(node)
+    and inflow arrives partitioned by dst ≡ node, so from round 2 on
+    the join is exchange-free.
     """
-    # checkpoint the deduped edge list FIRST: nodes, degrees, the
+    # pin the deduped edge list FIRST: nodes, degrees, the
     # partitioned edge frame, and the dangling flag all derive from it,
     # and without the cut each would re-run the caller's (possibly
     # fact-join-sized) edge derivation from scratch
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
+    e = pin(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct())
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_total = nodes.count()
     if n_total == 0:
+        release(e)
         return nodes.withColumn("rank", F.lit(0).cast("long"))
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # degree rides the edge checkpoint; partition by src so each round's
+    # degree rides the edge pin; partition by src so each round's
     # rank join exchanges only the (|nodes|-sized) rank side
-    ed = e.join(deg, "src").repartition("src").localCheckpoint(eager=True)
+    ed = pin(e.join(deg, "src").repartition("src"))
 
     teleport = (15 * scale) // (100 * n_total)
-    # rank frame carries (node, rank, __dang): a node is dangling iff it
-    # has no out-degree — the flag is immutable, so it is computed ONCE
-    # and rides the per-round checkpoint instead of being re-derived by
-    # a per-round anti-join + join (guide §2.4).
-    # checkpointed once (replacing the old dangling-set checkpoint):
-    # every round consumes the rank frame twice (edge join, new-rank
-    # join) and round 1 would otherwise replay the degree join per
-    # consumer.
-    # r15 (guide §1.4/§2.4, the CC observe pattern): the dangling TOTAL
-    # rides each checkpoint materialization as a DataFrame.observe
-    # metric instead of being a per-round agg job + BroadcastExchange +
-    # BNLJ — the next round needs only the scalar, and it is exact
-    # BIGINT arithmetic, so it enters the round as a driver literal
-    # bit-identically (dang_tot // n_total in Python == BIGINT div for
-    # the non-negative values here; sum over an empty filter observes
-    # NULL → 0).
+    # the rank frame is pinned every round: each round consumes it twice
+    # (edge join, new-rank join). The dangling TOTAL rides each pin as a
+    # DataFrame.observe metric and enters the next round as a driver
+    # literal — exact BIGINT arithmetic (dang_tot // n_total in Python
+    # == BIGINT div for non-negative values; an empty sum observes NULL
+    # → 0), with no per-round agg job or broadcast.
     _dang_sum = F.sum(F.when(F.col("__dang"), F.col("rank"))).alias("__dang_tot")
     obs = Observation()
-    ranks = (
+    ranks = pin(
         nodes.join(deg.select(F.col("src").alias("node"), "deg"), "node", "left")
         .select(
             "node",
             F.lit(scale // n_total).cast("long").alias("rank"),
             F.col("deg").isNull().alias("__dang"),
         )
-        .observe(obs, _dang_sum)
-        .localCheckpoint(eager=True)
+        .observe(obs, _dang_sum),
+        replaces=(e, nodes),
     )
     for _ in range(iters):
         dang_share = (obs.get["__dang_tot"] or 0) // n_total
@@ -277,7 +234,7 @@ def pagerank_exact(
         ).select("dst", F.expr("rank div deg").alias("__c"))
         inflow = contrib.groupBy("dst").agg(F.sum("__c").alias("__inflow"))
         obs = Observation()
-        ranks = (
+        ranks = pin(
             ranks.select("node", "__dang")
             .join(inflow.withColumnRenamed("dst", "node"), "node", "left")
             .select(
@@ -291,9 +248,10 @@ def pagerank_exact(
                 ).cast("long").alias("rank"),
                 "__dang",
             )
-            .observe(obs, _dang_sum)
-            .localCheckpoint(eager=True)
+            .observe(obs, _dang_sum),
+            replaces=(ranks,),
         )
+    release(ed)
     return ranks.select("node", "rank")
 
 
@@ -316,17 +274,16 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
 
     Plan shape: 3 equi-joins + 2 groupBys, all shuffles keyed on node
     ids; no theta join, no cross join, no driver data. The oriented
-    edge list is localCheckpoint'd once since the wedge self-join and
-    the closing-edge probe both reuse it.
+    edge list is pinned once (replacing the deduped edge pin) since the
+    wedge self-join and the closing-edge probe both reuse it.
     """
-    e = (
+    e = pin(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -338,15 +295,15 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     # break by id, and ids are distinct, so the order is total
     du, dv = F.col("du"), F.col("dv")
     u_first = (du < dv) | ((du == dv) & (F.col("u") < F.col("v")))
-    oriented = (
+    oriented = pin(
         e.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
         .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
             F.when(u_first, dv).otherwise(du).alias("dt"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        replaces=(e,),
     )
     o1 = oriented.select(F.col("s"), F.col("t").alias("b"), F.col("dt").alias("db"))
     o2 = oriented.select(F.col("s"), F.col("t").alias("c"), F.col("dt").alias("dc"))
@@ -385,24 +342,22 @@ def bfs_khop(
     Scale: per round ONE shuffle of the frontier joined against the
     symmetrized edge list (pre-partitioned on the join key once, the
     CC/PageRank trick), state is (node, dist) — never materializes
-    paths. k rounds total, localCheckpoint per round to cut lineage.
+    paths. k rounds total, one pin per round to cut lineage.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    sym = (
+    sym = pin(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .repartition("u")
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = pin(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     for _ in range(k):
         reached = (
@@ -410,12 +365,11 @@ def bfs_khop(
             .join(sym, "u")
             .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
         )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        dist = pin(
+            dist.unionByName(reached).groupBy("node").agg(F.min("dist").alias("dist")),
+            replaces=(dist,),
         )
+    release(sym)
     return dist
 
 
@@ -449,18 +403,16 @@ def sssp_khop(
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
     )
-    sym = (
+    sym = pin(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
         .repartition("u")
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = pin(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(k):
         relaxed = (
@@ -468,10 +420,9 @@ def sssp_khop(
             .join(sym, "u")
             .select(F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+        dist = pin(
+            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist")),
+            replaces=(dist,),
         )
+    release(sym)
     return dist

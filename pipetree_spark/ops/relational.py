@@ -11,6 +11,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipetree_spark.jvm import hadoop_fs
+
 
 def asof_join(
     left: DataFrame,
@@ -297,79 +299,16 @@ def fan_out(df: DataFrame, multiple: int = 1) -> DataFrame:
     except Exception:
         max_split = 128 << 20
     try:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
         est_splits = 0
         for f in files:
-            jpath = jvm.org.apache.hadoop.fs.Path(f)
-            size = jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
+            fs, jpath = hadoop_fs(spark, f)
+            size = fs.getFileStatus(jpath).getLen()
             est_splits += max(1, -(-size // max_split))
             if est_splits >= target:
                 return df
     except Exception:
         return df
     return df.repartition(target)
-
-
-#: Default stored-bytes ceiling for a broadcast HINT on a frame derived
-#: from a checkpointed relation: 64 MB of stored rows keeps the hinted
-#: hash relation safely inside any sane broadcast budget; past it the
-#: join is left unhinted and AQE picks the strategy from runtime sizes
-#: (r15 ADVICE, medium — an unconditional hint gambles driver memory on
-#: a data-proportional set).
-BROADCAST_HINT_MAX_BYTES = 64 << 20
-
-
-def stored_bytes(df: DataFrame) -> int | None:
-    """Driver-side stored size (mem+disk bytes) of a ``localCheckpoint``-ed
-    frame — read from the block manager's RDD storage info, so a gate on
-    it costs ZERO jobs (a ``DataFrame.observe`` metric or a ``count()``
-    each measured ~0.1 s of extra job + blocking per query at sf0.1).
-    Returns None when the backing RDD cannot be found (callers treat
-    that as too-big)."""
-    try:
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        rid = jrdd.id()
-        for info in df.sparkSession._jsc.sc().getRDDStorageInfo():
-            if info.id() == rid:
-                return int(info.memSize()) + int(info.diskSize())
-    except Exception:
-        pass
-    return None
-
-
-def broadcast_if_small(
-    df: DataFrame,
-    stored: DataFrame,
-    max_bytes: int = BROADCAST_HINT_MAX_BYTES,
-) -> DataFrame:
-    """Broadcast-hint ``df`` only while ``stored`` (the checkpointed
-    frame ``df`` derives from and is bounded by) materialized at ≤
-    ``max_bytes`` — the shared zero-job gate behind the LSH candidate-id
-    and cluster-dedup rep-id semi-joins."""
-    size = stored_bytes(stored)
-    if size is not None and size <= max_bytes:
-        return F.broadcast(df)
-    return df
-
-
-def release_checkpoint(df: DataFrame) -> bool:
-    """Release the executor-pinned RDD behind a ``localCheckpoint``-ed
-    frame. ``Dataset.unpersist()`` is a SILENT NO-OP for checkpoint
-    state — it only consults the SQL CacheManager, while localCheckpoint
-    persists its RDD directly (probed r14: getPersistentRDDs stays at 1
-    after unpersist(), drops to 0 after this) — so long-lived sessions
-    that loop over checkpointing ops (bench reps, multi-list RRF specs
-    calling bm25_scores per list) need this to bound executor storage.
-    Reaches the pinned RDD through the analyzed ``LogicalRDD``; returns
-    True if one was found and unpersisted. The frame MUST NOT be reused
-    afterwards — its lineage was truncated at checkpoint time and
-    cannot be recomputed."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        return True
-    except Exception:
-        return False
 
 
 def sized_repartition(
@@ -433,9 +372,7 @@ def sized_repartition(
     # coalesce: coalesce(1) would collapse the parallel upstream scan
     # into one task; repartition only shuffles the ~sample_rows rows.
     sample.repartition(1).write.mode("overwrite").parquet(sample_path)
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(sample_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, sample_path)
     try:
         probe_bytes, sampled = 0, 0
         files = fs.listFiles(jpath, True)

@@ -335,17 +335,14 @@ def incremental_dedup_batch(
             "left_anti",
         )
     # three actions consume this deterministic frame (count, data
-    # write, ledger write); r15 (guide §5): a lazy localCheckpoint
-    # computes the window-dedup + ledger anti-join ONCE — the count
-    # materializes it, both writes read the stored blocks — instead of
-    # three full evaluations per micro-batch. The write ORDER is
-    # unchanged (data first into the batch's own partition, ledger
-    # last as the commit point — see the crash analysis above), and
-    # the pinned blocks are released before returning so a long-lived
-    # stream's executor storage stays bounded.
-    from pipetree_spark.ops.relational import release_checkpoint
+    # write, ledger write): a lazy pin computes the window-dedup +
+    # ledger anti-join ONCE (the count materializes it) and is released
+    # before returning, so a long-lived stream's storage stays bounded.
+    # Write ORDER: data first into the batch's own partition, ledger
+    # last as the commit point (see the crash analysis above).
+    from pipetree_spark.jvm import pin, release
 
-    firsts = firsts.localCheckpoint(eager=False)
+    firsts = pin(firsts, eager=False)
     try:
         admitted = firsts.count()
         firsts.drop("__nh").write.mode("overwrite").parquet(
@@ -355,7 +352,7 @@ def incremental_dedup_batch(
             F.col("__nh").alias("nh"), F.lit(batch_id).cast("long").alias("batch_id")
         ).write.mode("append").parquet(ledger_dir)
     finally:
-        release_checkpoint(firsts)
+        release(firsts)
     return admitted
 
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipetree_spark.jvm import broadcast_if_small, pin
+
 #: Heuristic per-language stopword profiles for the n-gram/stopword
 #: language-ID op. Tiny on purpose — a real deployment plugs in full
 #: profiles; the *operator* (broadcast map + overlap scoring) is what
@@ -1198,45 +1200,31 @@ def near_dup_pairs_lsh(
     join branches, so the input takes the fan_out parallelism floor
     once here (no-op on real corpora; see minhash_signatures).
 
-    r15 opt-wave-2 (guide §3.2/§8): the verify stage only ever READS
-    shingles for docs that appear in a candidate pair, yet it used to
-    rebuild them for the whole corpus on both branches. The candidate
-    frame (id pairs only — bytes bounded by banding collisions, the
-    op's own linearity contract) is checkpointed so the banding
-    pipeline runs ONCE, and its distinct doc ids semi-join-filter the
-    input so only candidate docs are ever re-shingled: verify CPU
-    drops from 2×|corpus| to 2×|candidates| with a byte-identical pair
-    set (the dropped docs could never reach the output — both join keys
-    come from cand).
-
-    r16 (r15 ADVICE, medium): the broadcast of the candidate-id set is
-    HINTED only while the materialized pair frame's stored size stays
-    under :func:`~pipetree_spark.ops.relational.broadcast_if_small`'s
-    ceiling (block-manager storage info — zero extra jobs); a
-    near-dup-heavy corpus whose candidate ids outgrow driver memory
-    falls through to an unhinted semi join and AQE picks the strategy
-    from runtime sizes. The
-    checkpoint is eager — under AQE ``eager=False`` materialized every
-    upstream stage at construction anyway (the ``.rdd`` plan
-    finalization, r15 wave-2 finding 2), so eagerness costs nothing.
-    NOTE: construction of this frame therefore runs the banding jobs
-    at CALL time; compose lazily only behind the pipeline walker's
-    hit-aware skip.
+    The candidate frame (id pairs only — bytes bounded by banding
+    collisions, the op's own linearity contract) is pinned so the
+    banding pipeline runs ONCE, and its distinct doc ids semi-join the
+    input so only candidate docs are re-shingled: verify CPU is
+    2×|candidates|, not 2×|corpus|, with a byte-identical pair set (both
+    join keys come from cand). The id set is broadcast-HINTED only while
+    the pin's stored size stays under
+    :func:`~pipetree_spark.jvm.broadcast_if_small`'s ceiling (zero extra
+    jobs); past it AQE picks the strategy from runtime sizes. The pin is
+    eager (a lazy one runs every upstream stage at construction anyway),
+    so building this frame runs the banding jobs at CALL time; compose
+    lazily only behind the pipeline walker's hit-aware skip.
 
     ``collapse_exact=False`` is for callers that have ALREADY
     exact-collapsed their input (e.g. q_dedup_cluster_lsh, which needs
     the rep map itself and would otherwise pay the normalize+md5
     corpus pass twice); default behavior is unchanged."""
-    from pipetree_spark.ops.relational import broadcast_if_small, fan_out
+    from pipetree_spark.ops.relational import fan_out
 
     df = fan_out(df)
-    cand = (
+    cand = pin(
         minhash_band_pairs(
             df, text_col, key_col, n, num_hashes, bands,
             collapse_exact=collapse_exact, max_bucket=max_bucket,
-        )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+        ).select("id_a", "id_b")
     )
     ids = broadcast_if_small(
         cand.select(F.col("id_a").alias(key_col))
@@ -1630,7 +1618,7 @@ def bpe_train(
     Scale shape: round state is |vocab| rows (≪ corpus; bounded by
     distinct words), the best pair is a broadcast 1-row frame, and each
     round adds exactly one small shuffle (the pair-count groupBy). Each
-    round's winner is localCheckpoint(eager=False)-ed — the
+    round's winner is lazily pinned — the
     kmeans_portable pattern — so round r's plan does not replay rounds
     0..r-1 per branch. Production BPE at larger n_merges would update
     pair counts incrementally instead of recounting (only pairs
@@ -1669,7 +1657,7 @@ def bpe_train(
             .groupBy("pair")
             .agg(F.sum("freq").alias("pair_count"))
         )
-        best = (
+        best = pin(
             cnt.orderBy(F.col("pair_count").desc(), F.col("pair").asc())
             .limit(1)
             .select(
@@ -1677,8 +1665,8 @@ def bpe_train(
                 F.split("pair", sep).getItem(0).alias("lhs"),
                 F.split("pair", sep).getItem(1).alias("rhs"),
                 "pair_count",
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         rounds.append(best)
         state = state.crossJoin(F.broadcast(best.select("lhs", "rhs"))).select(
@@ -2689,7 +2677,6 @@ def bm25_scores(
     key_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    state_sink: list | None = None,
 ) -> DataFrame:
     """Okapi BM25 relevance of each document for each query term — the
     text-retrieval scorer beside TF-IDF (r11 verdict item 8):
@@ -2710,7 +2697,7 @@ def bm25_scores(
     Scale shape (r13 restructure — the q_search_rrf 10× stress showed
     the original's THREE corpus explode passes dominating): ONE token
     explode collapses map-side into a per-doc stats frame
-    (dl + a tf column per query term), lazily localCheckpointed
+    (dl + a tf column per query term), lazily pinned
     (materialized once on the first action; plan audits stay free) —
     the same |docs|-row-state trade the ANN fit paths make, and the
     natural "document statistics" intermediate a retrieval engine
@@ -2720,17 +2707,11 @@ def bm25_scores(
     — dl already sits beside tf. Returns (key, term, tf, dl, score),
     one row per (doc, term) with tf > 0.
 
-    Cache contract (r13 ADVICE): each call pins ONE |docs|-row
-    checkpoint RDD on the executors for the session's lifetime —
-    repeated calls (bench reps, multi-list RRF specs) accumulate one
-    per call. A caller that scores many term lists over the SAME
-    corpus should make one call with the union of terms, or pass
-    ``state_sink=[]`` and release after its terminal action with
-    ``ops.relational.release_checkpoint(sink.pop())`` — NOT
-    ``.unpersist()``, which is a silent no-op for checkpoint state
-    (r14 self-review; release_checkpoint docstring has the probe).
-    The degenerate empty-terms frame is also appended (release is a
-    harmless no-op on it) so ``sink.pop()`` never IndexErrors. Plan
+    Each call pins ONE |docs|-row RDD until released: a caller scoring
+    many term lists over the SAME corpus should make one call with the
+    union of terms, and a long-lived session calls
+    :func:`pipetree_spark.jvm.release` on the result after its last
+    action. Plan
     width is one agg column + one union branch per term — fine at
     retrieval-query arity (≤ ~32 terms); beyond that a (doc, word)
     join plan beats column fan-out, and this fn warns."""
@@ -2762,33 +2743,26 @@ def bm25_scores(
                 T.StructField("score", T.DoubleType()),
             ]
         )
-        empty = df.sparkSession.createDataFrame([], schema)
-        if state_sink is not None:
-            state_sink.append(empty)  # keep the pop-and-release contract
-        return empty
+        return df.sparkSession.createDataFrame([], schema)
     toks = df.select(
         F.col(key_col), F.explode(tokens(text_col)).alias("word")
     ).where(F.length("word") > 0)
-    # lazy checkpoint (the bpe_train precedent): ONE stats pass feeds
-    # both the per-doc tf frame and the corpus model aggregate (Catalyst
-    # cannot share scans across self-join branches). r15 correction to
-    # the earlier claim here: under AQE, localCheckpoint(eager=False)
-    # still MATERIALIZES every upstream query stage at call time
-    # (taking .rdd finalizes the adaptive plan) — only the final stage
-    # defers — so construction is NOT free; the checkpoint's value is
-    # single evaluation, not laziness. (A CacheManager .cache() would
-    # be lazy but canonicalized plan matching could serve one bench
-    # rep's result to the next — cross-run result reuse — so it is
-    # banned here.)
-    docstats = toks.groupBy(key_col).agg(
-        F.count("*").alias("dl"),
-        *[
-            F.sum((F.col("word") == t).cast("long")).alias(f"__tf_{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).localCheckpoint(eager=False)
-    if state_sink is not None:
-        state_sink.append(docstats)
+    # lazy pin (the bpe_train precedent): ONE stats pass feeds both the
+    # per-doc tf frame and the corpus model aggregate (Catalyst cannot
+    # share scans across self-join branches); its value is single
+    # evaluation, not laziness (see jvm.pin). A CacheManager .cache()
+    # is banned here: canonicalized plan matching could serve one bench
+    # rep's result to the next.
+    docstats = pin(
+        toks.groupBy(key_col).agg(
+            F.count("*").alias("dl"),
+            *[
+                F.sum((F.col("word") == t).cast("long")).alias(f"__tf_{i}")
+                for i, t in enumerate(terms)
+            ],
+        ),
+        eager=False,
+    )
     model = docstats.agg(
         F.count("*").alias("n_docs"),
         F.sum("dl").alias("sum_dl"),

@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pipetree_spark.jvm import pin, release
 from pipetree_spark.ops.relational import topk_per_group
 
 
@@ -42,6 +43,21 @@ _QUANTIZE_SQL = (
     "transform({col}, x -> cast(floor(cast(x as double)"
     " * CAST({scale} AS DOUBLE)) as bigint))"
 )
+
+
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled) — every column name a SQL string here interpolates goes
+    through it, so ``my-vec`` or ``select`` parse as columns."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sqdist(vec: str) -> str:
+    return _SQDIST_SQL.format(vec=ident(vec))
+
+
+def _pq_quantize(vec_col: str, scale: int) -> Column:
+    return F.expr(_QUANTIZE_SQL.format(col=ident(vec_col), scale=scale))
 
 
 def _d(x: Column) -> Column:
@@ -328,16 +344,13 @@ def lsh_bucket_ann(
 
 def _centroid_frame(spark, rows) -> DataFrame:
     """1-row LOCAL ``__cs`` centroid frame from driver-collected
-    ``(cid, cv)`` rows — the r15 opt-wave-2 model-state transport for
-    :func:`kmeans_portable_fit` (guide §2.4/§5). The values are
-    computed ENTIRELY by Spark aggregates; Python only ferries exact
-    longs (NULLs preserved), so the frame is bit-identical to the old
-    ``collect_list`` + ``localCheckpoint`` formulation it replaces —
-    minus the checkpoint job, the block-store round trip and the
-    corpus-lineage broadcast build every consumer used to pay. Every
-    consumer expression (array_min argmin, (d, cid) struct sort,
-    filter-by-cid) is order-insensitive; rows are sorted by cid only
-    so the frame itself is deterministic."""
+    ``(cid, cv)`` rows — the model-state transport for
+    :func:`kmeans_portable_fit`. The values are computed ENTIRELY by
+    Spark aggregates; Python only ferries exact longs (NULLs
+    preserved), so no pin, block-store round trip or corpus-lineage
+    broadcast build is needed. Every consumer expression is
+    order-insensitive; rows are sorted by cid only so the frame itself
+    is deterministic."""
     data = sorted(
         (
             (
@@ -472,9 +485,9 @@ def kmeans_portable_fit(
     # parity + the injection-reproducibility pytest pin it.
     q = df.select(
         key_col,
-        F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale)).alias("__qv"),
+        _pq_quantize(vec_col, scale).alias("__qv"),
     )
-    sqd = _SQDIST_SQL.format(vec="__qv")
+    sqd = _sqdist("__qv")
 
     def assign(centroid_row: DataFrame) -> DataFrame:
         enc = F.expr(
@@ -499,20 +512,12 @@ def kmeans_portable_fit(
         )
         return a_inj, centroids
 
-    # Model-state transport (r15 opt-wave-2, guide §2.4/§5): each k-row
-    # centroid state is COLLECTED and re-enters as a LOCAL 1-row frame
-    # (:func:`_centroid_frame`) instead of the r9→r15 ``collect_list``
-    # + ``localCheckpoint(eager=False)`` formulation. The values are
-    # unchanged (same Spark aggregates; Python only ferries exact
-    # longs), downstream plans still see a leaf — but the leaf is now
-    # driver-local data: no checkpoint-materialization job and no
-    # block-store round trip per iteration, and every downstream
-    # broadcast of the model builds from local rows instead of
-    # re-collecting a checkpointed RDD (one fewer job per consumer
-    # branch). Cost: the fit becomes EAGER at construction — exactly
-    # the jobs the first action used to trigger, just earlier; the
-    # driver-side bytes are the same k×dim longs the old broadcast
-    # already collected to the driver.
+    # Model-state transport: each k-row centroid state is COLLECTED and
+    # re-enters as a LOCAL 1-row frame (:func:`_centroid_frame`) — a
+    # driver-local leaf, so no pin job or block-store round trip per
+    # iteration, and every downstream broadcast builds from local rows.
+    # Cost: the fit runs EAGERLY at construction; the driver holds the
+    # same k×dim longs any broadcast of the model collects anyway.
     spark = df.sparkSession
     # init = the k smallest keys' vectors, cid = key rank: ONE
     # TakeOrdered job; the rank assignment (row_number over
@@ -644,8 +649,10 @@ def _multiprobe_assign_arrow(
                     dtype=np.int64)
     k = len(cids)
     out_schema = ", ".join(
-        [f"{key_col} {tgt.schema[key_col].dataType.simpleString()}"]
-        + [f"{c} {tgt.schema[c].dataType.simpleString()}" for c in carry_cols]
+        [
+            f"{ident(c)} {tgt.schema[c].dataType.simpleString()}"
+            for c in (key_col, *carry_cols)
+        ]
         + ["cluster long"]
     )
 
@@ -740,7 +747,7 @@ def ivf_multiprobe_assign(
     q = renamed.select(
         key_col,
         *carry_cols,
-        F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale)).alias("__qv"),
+        _pq_quantize(vec_col, scale).alias("__qv"),
     )
     return _probe_cells(q, centroids, n_probe, key_col, tuple(carry_cols))
 
@@ -941,11 +948,11 @@ def blocked_cos_pairs_arrow(
         # tile oversized blocks: T = ⌈m/cap⌉ hash buckets per block,
         # each row exploded into its T bucket-pair tiles. The sizes
         # frame is k rows — broadcast, never a shuffle. The input is
-        # lazily checkpointed first: sizes AND the join both consume
+        # lazily pinned first: sizes AND the join both consume
         # it, and without the materialization the (possibly expensive)
         # membership-producing stage runs twice — measured 2× the whole
         # pair pass on the 200k stress.
-        src = memberships.localCheckpoint(eager=False)
+        src = pin(memberships, eager=False)
         sizes = src.groupBy(block_col).agg(F.count("*").alias("__m"))
         src = (
             src.join(F.broadcast(sizes), block_col)
@@ -1033,7 +1040,7 @@ def semantic_dedup(
         F.lit(1).alias("is_kept"),
     )
     nz = eb.filter(ok)
-    # r15 note: a lazy localCheckpoint on this collapse (the
+    # r15 note: a lazy pin on this collapse (the
     # semantic_dedup_ann move — it is consumed by both the pair/CC
     # build and the rep_comp join) was measured SLOWER here in two
     # alternating A/B cycles (1.82-2.14 s vs 1.55-1.80 s at sf0.1):
@@ -1136,13 +1143,9 @@ def semantic_dedup_ann(
     # shuffle of the embeddings and is consumed by TWO job chains — the
     # membership/pair/CC build (which materializes inside CC's round-0
     # job) and the final rep_comp join — so without a lineage cut it
-    # evaluates twice per query. Lazy checkpoint: CC's first job
+    # evaluates twice per query. Lazy pin: CC's first job
     # materializes it, the final join reads the stored blocks.
-    grp = (
-        nz.groupBy("embedding")
-        .agg(F.min("vec_id").alias("rep_id"))
-        .localCheckpoint(eager=False)
-    )
+    grp = pin(nz.groupBy("embedding").agg(F.min("vec_id").alias("rep_id")), eager=False)
     if n_clusters == "auto" or n_probe == "auto":
         import math
 
@@ -1208,7 +1211,7 @@ def _probe_cells(
     pattern — was ~70 RPCs of lambda-built Column tree); named_struct
     builds the same struct<d,cid> the F.struct formulation did, so the
     (d, cid) array_sort tie-break is unchanged."""
-    sqd = _SQDIST_SQL.format(vec="__qv")
+    sqd = _sqdist("__qv")
     return qq.crossJoin(F.broadcast(cents)).select(
         query_key,
         *carry,
@@ -1369,11 +1372,11 @@ def pca_power_portable(
     ``groupBy(dim)`` shuffle whose map-side combine reduces traffic to
     64·n_partitions rows. The 1-row max-abs aggregates broadcast back.
 
-    The 1-row iterate/max frames are eagerly ``localCheckpoint``-ed
-    (the ops.graph connected-components precedent): without the
-    lineage cut every reference re-evaluates its whole upstream
-    subtree and the plan re-scans the corpus ~2^iters times (measured
-    50 s vs ~6 s at sf0.01). Only 1-row model state is materialized —
+    The 1-row iterate/max frames are eagerly pinned, each iterate
+    releasing the previous round's state: without the lineage cut
+    every reference re-evaluates its whole upstream subtree and the
+    plan re-scans the corpus ~2^iters times (measured 50 s vs ~6 s at
+    sf0.01). Only 1-row model state is materialized —
     corpus rows never leave executors.
     """
     q = df.select(
@@ -1383,14 +1386,13 @@ def pca_power_portable(
         ).alias("__qv"),
     )
     dims = F.posexplode("__qv")
-    mu_row = (
+    mu_row = pin(
         q.select(dims.alias("__i", "__x"))
         .groupBy("__i")
         .agg(F.floor(F.sum("__x").cast("double") / F.count("*")).cast("long").alias("__m"))
         .groupBy()
         .agg(F.array_sort(F.collect_list(F.struct("__i", "__m"))).alias("__s"))
         .select(F.transform("__s", lambda t: t["__m"]).alias("__mu"))
-        .localCheckpoint()
     )
     cq = q.crossJoin(F.broadcast(mu_row)).select(
         key_col, F.zip_with("__qv", "__mu", lambda x, m: x - m).alias("__cq")
@@ -1417,23 +1419,22 @@ def pca_power_portable(
             t = cq.crossJoin(F.broadcast(v_row)).select(
                 key_col, "__cq", dot_v(F.col("__v")).alias("__t")
             )
-        mt = t.agg(F.max(F.abs("__t")).alias("__mt")).localCheckpoint()
+        mt = pin(t.agg(F.max(F.abs("__t")).alias("__mt")))
         s = t.crossJoin(F.broadcast(mt)).select(
             "__cq",
             F.floor(F.col("__t").cast("double") / F.col("__mt") * F.lit(float(rescale)))
             .cast("long")
             .alias("__sc"),
         )
-        # checkpoint the 64-row w — mw and the next iterate then derive
+        # pin the 64-row w — mw and the next iterate then derive
         # from materialized data instead of re-running the corpus pass
-        w = (
+        w = pin(
             s.select(F.col("__sc"), F.posexplode("__cq").alias("__i", "__x"))
             .groupBy("__i")
             .agg(F.sum(F.col("__sc") * F.col("__x")).alias("__w"))
-            .localCheckpoint()
         )
         mw = w.agg(F.max(F.abs("__w")).alias("__mw"))
-        v_row = (
+        v_row = pin(
             w.crossJoin(F.broadcast(mw))
             .select(
                 "__i",
@@ -1443,9 +1444,10 @@ def pca_power_portable(
             )
             .groupBy()
             .agg(F.array_sort(F.collect_list(F.struct("__i", "__vd"))).alias("__s"))
-            .select(F.transform("__s", lambda st: st["__vd"]).alias("__v"))
-            .localCheckpoint()
+            .select(F.transform("__s", lambda st: st["__vd"]).alias("__v")),
+            replaces=(mt, w, v_row),
         )
+    release(mu_row)
     absv = F.transform("__v", F.abs)
     mabs = F.array_max(absv)
     signed = F.when(
@@ -1456,10 +1458,6 @@ def pca_power_portable(
         F.col("component").cast("long").alias("component"),
         F.col("loading").cast("long").alias("loading"),
     )
-
-
-def _pq_quantize(vec_col: str, scale: int) -> Column:
-    return F.expr(_QUANTIZE_SQL.format(col=vec_col, scale=scale))
 
 
 def _pq_subvectors(qv: Column, m: int, dim: int) -> Column:
@@ -1543,7 +1541,7 @@ def pq_fit_portable(
     # kmeans_portable_fit): in the filter lambda the bare ``sub``
     # resolves to the OUTER row's subspace column, exactly the
     # F.col("sub") the Column formulation bound
-    sqd = _SQDIST_SQL.format(vec="__qsv")
+    sqd = _sqdist("__qsv")
 
     def assign(cb_row: DataFrame) -> DataFrame:
         enc = F.expr(
@@ -1581,12 +1579,8 @@ def pq_fit_portable(
         .withColumn("cid", (F.row_number().over(Window.orderBy(key_col)) - 1).cast("long"))
         .select(key_col, "cid")
     )
-    # Same model-state transport as kmeans_portable_fit (see the
-    # comment there): each m·n_codes-row codebook state is collected
-    # and re-enters as a LOCAL 1-row frame — same values, no checkpoint
-    # job, no block-store round trip, and ADC consumers that
-    # broadcast-join it in branches separate from the codes frame
-    # build those broadcasts from local rows.
+    # same model-state transport as kmeans_portable_fit: each
+    # m·n_codes-row codebook state re-enters as a LOCAL 1-row frame
     spark = df.sparkSession
     cb = _codebook_frame(
         spark,

@@ -48,11 +48,9 @@ def declare(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 # certification window, ROTATED each round toward maximal marginal
 # certification.
 #
-# r8 discipline (the r7 verdict's #2 directive): the rotation is now
-# DERIVED FROM THE RECORD at load time instead of hand-pinned — the two
-# rounds of comment/tuple/test drift this caused (r6 overstated the
-# rotation; r7's hardcoded pin self-invalidated when the round
-# succeeded) end here. The rule, applied to CORRECTNESS_r*.json:
+# The rotation is DERIVED FROM THE RECORD at load time (a hand-pinned
+# window self-invalidates the moment a round succeeds). The rule,
+# applied to CORRECTNESS_r*.json:
 #   effective_round(q) = latest round with a fully green row (oracled)
 #                        or any ran-row (rows-only; they can't go green),
 #                        0 if the driver has never produced a row for q.
@@ -66,71 +64,12 @@ def declare(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 WINDOW = 50  # observed driver cut, constant across r1–r7
 
 #: Queries whose implementation or oracle changed since their last
-#: driver grade and whose certification is therefore stale regardless
-#: of the record. The ONLY hand-maintained part of the rotation.
-#: r12 note: all 17 r11 pin-touched entries graded green in
-#: CORRECTNESS_r11 (q_vec_ann_ivf rows-only-ran, its strongest grade),
-#: so the list empties per the standing rule. r12's new declarations
-#: (BPE scale path, phash dedup, substring dedup, html extract,
-#: unigram trainer, bm25) are never-graded and lead the window
-#: automatically — they must NOT sit here.
-#: r13 note: both r12 entries (q_text_bpe_train/encode) graded green in
-#: CORRECTNESS_r12, so they drop off per the standing rule. The r13
-#: entries are the queries whose op code or oracle text changed this
-#: round (the r12 ADVICE fixes): the URL family's scheme-dependent
-#: default-port strip + mismatched-port synthesizer case (values
-#: changed on both engines), the WARC body decode's charset handling,
-#: the repeated-header parse, the key_col schema threading through the
-#: fingerprint/EXIF/WARC stages, and unigram_train's max_vocab kwarg
-#: (default None = certified path unchanged; the collapse now calls
-#: the shared ops.text.bpe_word_freqs with max_word_len).
-#: r14 note: all 18 r13 entries graded green in CORRECTNESS_r13, so
-#: they drop off per the standing rule. The r14 entries are the
-#: queries whose op code or oracle changed this round: the line-dedup
-#: join-back re-plan (xxhash64 keys + boilerplate-only filtered LEFT
-#: join — oracle text unchanged, values unchanged, plan changed), the
-#: q_text_nfc synth change (one residue class now omits the
-#: decomposed insert so changed=0 rows sit under the hash — VALUES
-#: changed on both engines), the rrf_score expression normalization
-#: (same arithmetic, rebuilt column tree), and bm25_scores' new
-#: state_sink/warn surface (default path unchanged). All re-passed
-#: sf0.001 + sf0.01 + vanilla parity locally this round.
-#: r15 note: all 7 r14 entries graded green in CORRECTNESS_r14, so
-#: they drop off per the standing rule. The r15 entries are the
-#: queries whose oracle TEXT (not values — the planted corpora are
-#: \x0B-free and Java's ``\s`` IS the explicit class, so both engines'
-#: values are unchanged) changed under the r14-ADVICE whitespace-class
-#: respelling (``\s`` → ``[ \t\n\x0B\f\r]`` in every twinned regex,
-#: closing the Java-vs-RE2 vertical-tab divergence), plus the
-#: queries whose generated oracle changed under the no-space-script
-#: class extension (Lao/Khmer/Myanmar/Tibetan added to
-#: CJK_CLASS_JAVA/_RE2 — same segment_text_sql interpolation). All
-#: re-passed sf0.001 + sf0.01 parity locally this round.
-RECONFIRM: tuple[str, ...] = (
-    "q_text_quality",        # r15: \s + bpe-token class respelled
-    "q_text_clean",          # r15: \s respelled
-    "q_dedup_exact",         # r15: \s respelled
-    "q_dedup_lsh_recall",    # r15: \s respelled
-    "q_dedup_minhash_band",  # r15: \s respelled
-    "q_dedup_near_lsh",      # r15: \s respelled
-    "q_dedup_cluster_lsh",   # r15: \s respelled
-    "q_dedup_incremental",   # r15: \s respelled
-    "q_pipe_crawl_e2e",      # r15: \s + anchor-regex class respelled
-    "q_text_extract_html",   # r15: \s + anchor-regex class respelled
-    "q_dedup_sentences",     # r15: sentence-boundary \s respelled
-    "q_dedup_sentences_rm",  # r15: sentence-boundary \s respelled
-    "q_pipe_curation",       # r15: \s respelled
-    "q_text_script_profile",  # r15: SEA script counts + routing labels
-    "q_text_cjk_segment",    # r15: WS + SEA script-class extension
-    "q_text_minhash_sig_cjk",  # r15: WS + SEA script-class extension
-    "q_text_langid_cjk",     # r15: WS + SEA script-class extension
-    "q_text_bpe_train_cjk",  # r15: WS + SEA script-class extension
-    "q_pipe_cjk_curation",   # r15: WS + SEA ext + spec chunk stage
-    "q_text_chunk",          # r15: n_chunks expr rebuilt for segmenter=
-    "q_text_robots_filter",  # r15: delegates to robots_gate_stage
-    "q_text_domain_cap",     # r15: delegates to domain_cap_stage
-    "q_text_token_budget",   # r15: delegates to token_budget_stage
-)
+#: driver grade, so their certification is stale regardless of the
+#: record — the ONLY hand-maintained part of the rotation. An entry
+#: drops off once a CORRECTNESS file grades it fully green (all r15
+#: entries did in r16); never-graded queries lead the window on their
+#: own and must NOT sit here.
+RECONFIRM: tuple[str, ...] = ()
 
 
 def _effective_rounds() -> dict[str, int]:

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pipetree_spark.catalog import load_table
+from pipetree_spark.jvm import pin
 from pipetree_spark.ops.graph import (
     bfs_khop,
     pagerank_exact,
@@ -323,11 +324,10 @@ def q_graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a, b = cp.alias("a"), cp.alias("b")
-    e = (
+    e = pin(
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.c") < F.col("b.c")))
         .select(F.col("a.c").alias("u"), F.col("b.c").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))

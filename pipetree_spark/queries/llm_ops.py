@@ -2649,44 +2649,25 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     min key per text, so min over reps = min over members) — the same
     canonical-label contract as q_dedup_keep_best/q_dedup_semantic.
 
-    r16 single-collapse re-plan (guide §2.3/§8; r15 verdict item 4):
-    the old shape ran the normalize+md5 corpus pass THREE times — once
-    inside the banding path's exact collapse and once per side of the
-    member re-attach (groupBy + join both re-derive ``__nh`` from the
-    raw scan; Catalyst cannot share the pass across branches). Now the
-    SLIM rep map (doc_id, n_chars, rep_id — never the text) is computed
-    from ONE checkpointed md5 pass — a map-side-combined rep groupBy +
-    AQE-skew-splittable enrich join, never a window (flood note below) —
-    and checkpointed; the banding
-    path receives the rep docs by an id semi-join against the raw scan
+    One normalize+md5 corpus pass: the SLIM rep map (doc_id, n_chars,
+    rep_id — never the text) comes from one pinned md5 pass, a
+    map-side-combined rep groupBy and an AQE-skew-splittable enrich
+    join, never a window (flood note below). The banding path receives
+    the rep docs by an id semi-join against the raw scan
     (``collapse_exact=False`` — identical rep rows: min doc_id per
-    normalized hash), and the re-attach reads the same checkpointed
-    map. One md5 pass, and the exact collapse's full-text shuffle is
-    replaced by an id semi-join (broadcast-hinted only while the
-    materialized rep map stays small — the same zero-job stored-bytes
-    gate as the LSH verify prefilter)."""
+    normalized hash; broadcast-hinted only while the pinned rep map
+    stays small), and the re-attach reads the same pinned map."""
+    from pipetree_spark.jvm import broadcast_if_small, pin
     from pipetree_spark.ops.graph import connected_components
-    from pipetree_spark.ops.relational import broadcast_if_small, release_checkpoint
 
     d = load_table(spark, sf_dir, "documents")
-    # flood discipline (r16 review): the rep selection must stay
-    # map-side-combinable — a window over __nh would ship every copy of
-    # a boilerplate flood's hot hash to ONE reducer (the shape
-    # exact_dedup measured 13× slower at 100k copies, and AQE cannot
-    # skew-split a window). The slim docs frame is checkpointed once
-    # (ONE md5 pass), the rep groupBy partial-aggregates before its
-    # exchange, and the enrich join back is AQE-skew-splittable.
-    docs = (
-        d.select("doc_id", "n_chars", TX.text_hash("text").alias("__nh"))
-        .localCheckpoint(eager=True)
-    )
+    # flood discipline: a window over __nh would ship every copy of a
+    # boilerplate flood's hot hash to ONE reducer (exact_dedup measured
+    # 13× slower at 100k copies; AQE cannot skew-split a window)
+    docs = pin(d.select("doc_id", "n_chars", TX.text_hash("text").alias("__nh")))
     reps = docs.groupBy("__nh").agg(F.min("doc_id").alias("rep_id"))
-    m = (
-        docs.join(reps, "__nh")
-        .select("doc_id", "n_chars", "rep_id")
-        .localCheckpoint(eager=True)
-    )
-    release_checkpoint(docs)  # m is materialized; the md5 pass is done
+    # m is materialized once pinned; the md5 pass is done
+    m = pin(docs.join(reps, "__nh").select("doc_id", "n_chars", "rep_id"), replaces=(docs,))
     # rep ids are a subset of the slim stored map; beyond the gate the
     # hint would gamble driver memory on a corpus-proportional set —
     # fall through and let AQE pick from runtime sizes
@@ -2698,8 +2679,13 @@ def q_dedup_cluster_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.5, num_hashes=16, bands=8, collapse_exact=False,
     ).select("id_a", "id_b")
     cc = connected_components(pairs, src="id_a", dst="id_b")
-    lab = m.join(cc, m["rep_id"] == cc["node"], "left").select(
-        "doc_id", "n_chars", F.coalesce("component", "rep_id").alias("component")
+    # the labeled map is the one pin the result reads: it releases the
+    # LSH candidates and the rep map (both behind ``pairs``) and the labels
+    lab = pin(
+        m.join(cc, m["rep_id"] == cc["node"], "left").select(
+            "doc_id", "n_chars", F.coalesce("component", "rep_id").alias("component")
+        ),
+        replaces=(pairs, cc),
     )
     w = Window.partitionBy("component").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
     return lab.select(

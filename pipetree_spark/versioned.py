@@ -61,6 +61,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipetree_spark.jvm import hadoop_fs
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first — reread and retry."""
@@ -93,20 +95,18 @@ class VersionedTable:
                 "VersionedTable manifest I/O needs a SparkSession "
                 "(pass spark= or create one first)"
             )
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
+        return hadoop_fs(spark, path)
 
     def _read_text(self, path: str) -> str:
-        fs, jpath, jvm = self._fs(path)
+        fs, jpath = self._fs(path)
         stream = fs.open(jpath)
         try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+            return bytes(stream.readAllBytes()).decode("utf-8")
         finally:
             stream.close()
 
     def _write_text(self, path: str, text: str) -> None:
-        fs, jpath, _ = self._fs(path)
+        fs, jpath = self._fs(path)
         out = fs.create(jpath, False)  # create-exclusive: no clobber
         try:
             out.write(bytearray(text.encode("utf-8")))
@@ -118,7 +118,7 @@ class VersionedTable:
         return f"{self.log_dir}/{n:06d}.json"
 
     def versions(self) -> list[int]:
-        fs, jlog, _ = self._fs(self.log_dir)
+        fs, jlog = self._fs(self.log_dir)
         if not fs.exists(jlog):
             return []
         out = []
@@ -141,18 +141,18 @@ class VersionedTable:
         version file in one atomic step; losing the promotion race to a
         concurrent writer raises CommitConflict (see module docstring
         for the per-scheme atomicity contract)."""
-        fs, jlog, _ = self._fs(self.log_dir)
+        fs, jlog = self._fs(self.log_dir)
         fs.mkdirs(jlog)
         latest = self.latest_version()
         n = 0 if latest is None else latest + 1
         target = self._version_file(n)
         tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
         payload = json.dumps({"version": n, "action": action, "dirs": dirs})
-        _, jtarget_probe, _ = self._fs(target)
+        _, jtarget_probe = self._fs(target)
         local = _local_path(fs, jtarget_probe)
         if local is not None:
             # kernel-level create-exclusive: link fails iff target exists
-            _, jtmp_probe, _ = self._fs(tmp)
+            _, jtmp_probe = self._fs(tmp)
             local_tmp = _local_path(fs, jtmp_probe)
             with open(local_tmp, "w") as fh:
                 fh.write(payload)
@@ -164,8 +164,8 @@ class VersionedTable:
                 os.unlink(local_tmp)
             return n
         self._write_text(tmp, payload)
-        _, jtarget, _ = self._fs(target)
-        _, jtmp, _ = self._fs(tmp)
+        _, jtarget = self._fs(target)
+        _, jtmp = self._fs(tmp)
         if fs.exists(jtarget) or not fs.rename(jtmp, jtarget):
             fs.delete(jtmp, False)
             raise CommitConflict(f"version {n} already committed")
@@ -191,7 +191,7 @@ class VersionedTable:
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no version {version!r} in {self.log_dir}")
-        fs, jfile, _ = self._fs(self._version_file(v))
+        fs, jfile = self._fs(self._version_file(v))
         if not fs.exists(jfile):
             raise FileNotFoundError(f"no version {version!r} in {self.log_dir}")
         dirs = self._manifest(v)["dirs"]
@@ -263,7 +263,7 @@ class VersionedTable:
             for n in vs[-retain_last:]
             for d in self._manifest(n)["dirs"]
         }
-        fs, jdir, _ = self._fs(self.dir)
+        fs, jdir = self._fs(self.dir)
         deleted = []
         for status in fs.listStatus(jdir):
             entry = status.getPath().getName()

@@ -694,6 +694,26 @@ def test_ivf_multiprobe_assign_contains_primary_cell(spark, sf_small):
     assert missing.count() == 0
 
 
+def test_ivf_multiprobe_assign_quotes_hostile_vector_columns(spark, sf_small):
+    """A vector column named ``my-vec`` or ``select`` assigns exactly like
+    ``embedding`` on both engines: the quantizer/probe SQL strings and the
+    Arrow twin's DDL schema quote it through ``VX.ident``."""
+    e = load_table(spark, sf_small, "embeddings").select("vec_id", "embedding")
+
+    def probes(frame, col, via):
+        return {
+            (r["vec_id"], r["cluster"])
+            for r in VX.ivf_multiprobe_assign(
+                frame, col, "vec_id", n_probe=2, n_clusters=4, carry_cols=(col,), via=via
+            ).collect()
+        }
+
+    want = probes(e, "embedding", "expr")
+    for name in ("my-vec", "select"):
+        for via in ("expr", "arrow"):
+            assert probes(e.withColumnRenamed("embedding", name), name, via) == want
+
+
 def test_pca_portable_matches_numpy_simulation(spark, sf_small):
     """pca_power_portable is a DEFINED deterministic statistic (3-step
     integer power iteration), so the distributed result must equal an
@@ -3690,32 +3710,23 @@ def test_mm_stages_honor_key_col_in_output(spark):
 
 
 @pytest.mark.slow
-def test_cc_amortized_check_converges_off_cycle(spark):
-    """r12: convergence checks run every check_every rounds (plus the
-    final round as the fixpoint assertion) — a graph converging
-    between checkpoints must still converge, with identical labels to
-    the per-round (check_every=1) behavior."""
+def test_cc_converges_and_raises_past_max_iter(spark):
+    """A diameter-4 chain plus a triangle converges to min-id labels;
+    a chain longer than max_iter rounds can reach (no pointer jumping)
+    raises instead of returning half-propagated labels."""
     from pipetree_spark.ops.graph import connected_components
 
-    # diameter-4 chain + a separate triangle
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10)],
         "src long, dst long",
     )
-    for ck in (1, 3, 4, 7):
-        got = {
-            r.node: r.component
-            for r in connected_components(edges, max_iter=25, check_every=ck).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10}, ck
-    # max_iter not a multiple of check_every: final-round assertion fires
-    import pytest as _pt
-
+    got = {r.node: r.component for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10}
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
-    with _pt.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=4, check_every=3, jump_after=None).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=4, jump_after=None).collect()
 
 
 def test_bm25_monotonicity_and_hand_value(spark):
@@ -4089,29 +4100,22 @@ def test_langid_cjk_accuracy_on_real_sentences(spark):
     assert out == {1: "zh", 2: "ja", 3: "ko", 4: "en"}
 
 
-def test_bm25_state_sink_and_release_checkpoint(spark):
-    """r14 self-review: Dataset.unpersist() is a silent no-op for
-    localCheckpoint state; release_checkpoint must actually drop the
-    pinned RDD, and the empty-terms path must keep the pop contract."""
-    from pipetree_spark.ops.relational import release_checkpoint
-    from pipetree_spark.ops.text import bm25_scores
+def test_bm25_release_frees_its_pin(spark):
+    """jvm.release on the scored result frees the one per-doc stats pin
+    bm25_scores made (``unpersist()`` is a no-op for checkpoint state)."""
+    from pipetree_spark.jvm import release
 
     df = spark.createDataFrame(
         [(1, "spark engine"), (2, "spark table")], "doc_id long, text string"
     )
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    sink = []
-    bm25_scores(df, ["spark"], state_sink=sink).collect()
-    assert len(sink) == 1
-    assert jsc.getPersistentRDDs().size() == before + 1
-    assert release_checkpoint(sink.pop())
-    assert jsc.getPersistentRDDs().size() == before
-    # empty-terms degenerate path still appends (pop never IndexErrors)
-    sink2 = []
-    bm25_scores(df, [], state_sink=sink2)
-    assert len(sink2) == 1
-    release_checkpoint(sink2.pop())  # harmless no-op
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    scored = TX.bm25_scores(df, ["spark"])
+    scored.collect()
+    made = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(made) == 1 and release(scored) == made
+    assert not set(jsc.getPersistentRDDs().keySet()) & made
+    assert release(TX.bm25_scores(df, [])) == set()
 
 
 def test_rrf_fuse_rejects_colliding_and_duplicate_names(spark):

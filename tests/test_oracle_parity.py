@@ -121,7 +121,7 @@ def test_driver_window_is_stalest_first():
     rnd = lambda n: eff.get(n, 0)  # noqa: E731
 
     assert all(n in window for n in RECONFIRM)
-    assert window[-len(RECONFIRM):] == list(RECONFIRM)
+    assert window[WINDOW - len(RECONFIRM):] == list(RECONFIRM)
 
     auto_in = [n for n in window if n not in RECONFIRM]
     outside = [n for n in order[WINDOW:] if n not in RECONFIRM]
