@@ -8,12 +8,13 @@ it builds the DAG, skips cached stages, and runs the rest". Same here:
 
 Skip-if-cached is on by default (artifacts under a per-user cache dir —
 $XDG_CACHE_HOME/pipetree_spark or ~/.cache/pipetree_spark; override with
---cache DIR or disable with --no-cache) — rerunning a spec recomputes
-only stages whose definition or upstreams changed, the reference's
-incremental-recompute UX. Cache keys are DEFINITION-addressed (spec +
-upstream keys + python-stage code fingerprint), not data-addressed: if
-the source data at an sf_dir changes in place, pass --no-cache or a
-fresh --cache dir.
+--cache DIR or disable with --no-cache) — rerunning a spec rewrites
+only stages whose definition or inputs' content changed, the
+reference's incremental-recompute UX. Cache keys hash the spec, the
+python-stage code fingerprint and the upstream identities (artifact
+digests for materialized upstreams). A source stage is keyed by its
+spec, not its files: if the source data at an sf_dir changes in place,
+pass --no-cache or a fresh --cache dir.
 
 JSON specs support the declarative stage types (source / values / sql /
 grid); ``python`` stages exist only in the direct API (a JSON file can't
@@ -60,9 +61,8 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--no-cache", action="store_true", help="disable the artifact cache")
     run.add_argument(
         "--targets", nargs="*", default=None,
-        help="only these stages (+ upstreams); targeted runs never "
-        "re-materialize evicted upstream artifacts whose consumers are "
-        "all cache hits — run targetless to backfill a partial cache",
+        help="only these stages (+ upstreams); an evicted upstream "
+        "artifact is rebuilt, since its consumers' keys need its digest",
     )
     run.add_argument("--show", type=int, default=0, metavar="N", help="print N rows per target")
 

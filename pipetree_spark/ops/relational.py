@@ -347,8 +347,8 @@ def sized_repartition(
     ``precomputed_rows`` from a count the caller already paid for.
 
     The result uses round-robin repartition(n) (even sizes, no key
-    skew); callers that need pruning or bucketing should use the
-    cache layer's partition_by/bucket_by sinks instead — this op is
+    skew); callers that need bucketing should use the cache layer's
+    bucket_by sink instead — this op is
     for the "just give me ~256 MB shards" export."""
     import math
     import uuid

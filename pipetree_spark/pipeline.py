@@ -17,9 +17,10 @@ on Spark:
   config with no python callables, so the whole spec stays
   JSON-serializable and content-keyable)
 - execution: topological walk; with an :class:`ArtifactCache`, each
-  stage's content key (spec + upstream keys) decides hit (read parquet,
-  lineage cut) vs miss (compute + materialize) — the reference's
-  incremental recomputation.
+  stage's content key (spec + upstream identities; a materialized
+  upstream's identity is its artifact digest) decides hit (read
+  parquet, lineage cut) vs miss (compute + materialize) — the
+  reference's incremental recomputation, with early cutoff.
 
 The reference's remote executor control plane (SQS/EC2) is deliberately
 NOT ported: Spark's own scheduler replaces it (SURVEY §2.10 non-goal).
@@ -30,7 +31,7 @@ from __future__ import annotations
 import hashlib
 import inspect
 import itertools
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from graphlib import CycleError, TopologicalSorter
 
@@ -136,30 +137,30 @@ class Pipeline:
         cache: ArtifactCache | None = None,
         targets: list[str] | None = None,
     ) -> dict[str, DataFrame]:
-        """Topological walk with skip-if-cached semantics.
+        """Topological walk with skip-if-cached semantics and early cutoff.
 
-        Returns every visited stage's DataFrame. ``report`` of
-        hits/misses from the last run is on ``self.last_run_report``.
+        Returns every stage frame the walk made (targets included).
+        ``report`` of hits/misses from the last run is on
+        ``self.last_run_report``.
 
-        r15 opt-wave-2 (guide §1.2): content keys derive from specs
-        alone, so cache hits are resolvable BEFORE any stage fn runs —
-        and when ``targets`` are given, a flow-through stage whose
-        every consumer is a cache hit is ``skipped`` outright instead
-        of building (and, for eager ops, executing) a DataFrame nobody
-        reads. Without ``targets`` every stage is wanted and the walk
-        is unchanged, so the certified hit/miss report semantics are
-        untouched for the full-walk callers.
+        A stage's key folds in its inputs' identities. A materialized
+        stage's identity is its artifact digest (read from the manifest
+        on a hit, measured by the write on a miss), so an edit that
+        leaves a stage's rows unchanged stops there: its consumers keep
+        their keys and stay hits. A flow-through stage's identity is its
+        key. A materialized miss is built as the walk reaches it;
+        flow-through frames and hit loads are made only when a built
+        stage or a target consumes them — anything else reports
+        ``skipped``.
 
-        NO-BACKFILL under targets (r15 ADVICE, by design): a targeted
-        walk (including CLI ``--targets``) never re-materializes a
-        cache-miss stage whose consumers are all hits — it reports
-        ``skipped``, not ``hit``, and a partially-evicted cache is NOT
-        repopulated. Run targetless to rebuild evicted intermediate
-        artifacts.
+        An evicted intermediate artifact is rebuilt, also under
+        ``targets`` (including CLI ``--targets``): its consumers' keys
+        need its digest.
+
+        A python stage whose captures cannot be hashed is never served
+        from cache, nor is any stage whose key folds in such a stage's
+        key through flow-through stages.
         """
-        results: dict[str, DataFrame] = {}
-        keys: dict[str, str] = {}
-        report: dict[str, str] = {}
         wanted = set(targets or self.stages)
         unknown = sorted(wanted - set(self.stages))
         if unknown:
@@ -167,57 +168,64 @@ class Pipeline:
                 f"unknown pipeline target(s) {unknown}; stages are {sorted(self.stages)}"
             )
         needed = self._closure(wanted)
-        for name in self._order:
-            if name not in needed:
-                continue
+        order = [n for n in self._order if n in needed]
+        keys: dict[str, str] = {}
+        ident: dict[str, str] = {}  # what consumers fold into their keys
+        unstable: set[str] = set()  # identity does not pin the content
+        hits: dict[str, dict] = {}  # stage -> its artifact's manifest
+        frames: dict[str, DataFrame] = {}
+        report: dict[str, str] = {}
+
+        def make(names: Iterable[str]) -> None:
+            """Make the frames of ``names`` and of the unmade stages they
+            read, inputs first; a hit is loaded, not rebuilt."""
+            todo, stack = set(), list(names)
+            while stack:
+                n = stack.pop()
+                if n in frames or n in todo:
+                    continue
+                todo.add(n)
+                if n not in hits:
+                    stack.extend(self.stages[n].inputs)
+            for n in order:
+                if n not in todo:
+                    continue
+                if n in hits:
+                    frames[n], report[n] = cache.load(spark, n, keys[n], hits[n]), "hit"
+                else:
+                    frames[n], report[n] = self._build(spark, n, frames), "computed"
+
+        for name in order:
             stage = self.stages[name]
-            keys[name] = content_key(stage.spec, [keys[i] for i in stage.inputs])
-        hits = {
-            name
-            for name in needed
-            if cache is not None
-            and self.stages[name].materialize
-            and not self.stages[name].spec.get("__uncacheable", False)
-            and cache.has(spark, name, keys[name])
-        }
-        # frames actually consumed: targets, plus the inputs of every
-        # stage that must RUN (traversal stops at hits — a loaded
-        # artifact needs none of its inputs)
-        live: set[str] = set()
-        stack = list(wanted)
-        while stack:
-            n = stack.pop()
-            if n in live:
+            key = keys[name] = content_key(stage.spec, [ident[i] for i in stage.inputs])
+            if stage.spec.get("__uncacheable", False) or unstable & set(stage.inputs):
+                unstable.add(name)
+            ident[name] = key
+            if cache is None or not stage.materialize:
                 continue
-            live.add(n)
-            if n not in hits:
-                stack.extend(self.stages[n].inputs)
-        for name in self._order:
-            if name not in needed:
-                continue
-            if name not in live:
-                report[name] = "skipped"
-                continue
-            stage = self.stages[name]
-            key = keys[name]
-            if name in hits:
-                results[name] = cache.load(spark, name, key)
-                report[name] = "hit"
-                continue
-            try:
-                df = stage.fn(spark, {i: results[i] for i in stage.inputs})
-            except Exception as exc:
-                raise RuntimeError(
-                    f"pipeline stage {name!r} failed ({type(exc).__name__}): {exc}"
-                ) from exc
-            if cache is not None and stage.materialize:
-                df = cache.materialize(spark, df, name, key)
-                report[name] = "materialized"
+            if name not in unstable and cache.has(spark, name, key):
+                manifest = hits[name] = cache.manifest(spark, name, key)
             else:
-                report[name] = "computed"
-            results[name] = df
-        self.last_run_report = report
-        return results
+                make(stage.inputs)
+                df = self._build(spark, name, frames)
+                frames[name] = cache.materialize(spark, df, name, key)
+                report[name] = "materialized"
+                manifest = cache.manifest(spark, name, key)
+            ident[name] = manifest["digest"]
+            if ident[name] != key:  # a measured digest pins the content
+                unstable.discard(name)
+        make(wanted)
+        self.last_run_report = {n: report.get(n, "skipped") for n in order}
+        return {n: frames[n] for n in order if n in frames}
+
+    def _build(self, spark: SparkSession, name: str, frames: dict[str, DataFrame]) -> DataFrame:
+        stage = self.stages[name]
+        try:
+            return stage.fn(spark, {i: frames[i] for i in stage.inputs})
+        except Exception as exc:
+            raise RuntimeError(
+                f"pipeline stage {name!r} failed ({type(exc).__name__}): {exc}"
+            ) from exc
 
     def _closure(self, targets: set[str]) -> set[str]:
         out: set[str] = set()

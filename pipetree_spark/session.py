@@ -59,6 +59,19 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """``$PIPETREE_SPARK_DRIVER_MEM``, else the smaller of 16g and half
+    of physical memory (a fixed 16g would exceed a smaller machine's RAM)."""
+    override = os.environ.get("PIPETREE_SPARK_DRIVER_MEM")
+    if override:
+        return override
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(16 << 10, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "pipetree-spark",
     master: str | None = None,
@@ -76,7 +89,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(cores, 8)))
-        .config("spark.driver.memory", os.environ.get("PIPETREE_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

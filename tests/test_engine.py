@@ -109,3 +109,16 @@ def test_load_table_events_us_and_ntz_encodings(spark, tmp_path):
     # exact integer columns, not float-derived
     assert [r[2] for r in got["ns"]] == ns_vals
     assert [r[3] for r in got["ns"]] == [ns // 10**9 for ns in ns_vals]
+
+
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    import os
+
+    from pipetree_spark.session import default_driver_memory
+
+    monkeypatch.setenv("PIPETREE_SPARK_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
+    monkeypatch.delenv("PIPETREE_SPARK_DRIVER_MEM")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    mb = int(default_driver_memory().removesuffix("m"))
+    assert 0 < mb <= min(16 << 10, phys_mb // 2)

@@ -228,6 +228,151 @@ def test_unhashable_capture_never_served_from_cache(spark, sf_small, tmp_path):
     assert p2.last_run_report["scaled"] != "hit"
 
 
+@pytest.mark.parametrize(
+    "producer_materialized,with_map", [(True, False), (False, False), (True, True)]
+)
+def test_consumer_of_uncacheable_stage_is_not_stale(
+    spark, sf_small, tmp_path, producer_materialized, with_map
+):
+    """A materialized stage over an uncacheable python stage must see
+    a new capture: through the producer's digest when it is materialized,
+    and through the propagated uncacheable mark when it flows through or
+    its map column leaves it without a measured digest."""
+    import numpy as np
+
+    cache = ArtifactCache(str(tmp_path))
+
+    def run(arr):
+        def fn(s, fr):
+            x = (F.col("o_orderkey") * int(arr[0])).alias("x")
+            m = F.create_map(F.lit("k"), F.col("o_orderkey")).alias("m")
+            return fr["orders"].select(x, m) if with_map else fr["orders"].select(x)
+
+        p = Pipeline.from_spec(
+            {"stages": {"orders": {"type": "source", "table": "orders", "sf_dir": sf_small}}}
+        )
+        p.add_stage("scaled", fn, inputs=["orders"], materialize=producer_materialized)
+        p.add_stage(
+            "tot",
+            lambda s, fr: fr["scaled"].agg(F.sum("x").alias("s")),
+            inputs=["scaled"],
+            materialize=True,
+        )
+        total = p.run(spark, cache=cache, targets=["tot"])["tot"].collect()[0].s
+        return total, p.last_run_report
+
+    one, _ = run(np.array([1]))
+    two, report = run(np.array([2]))
+    assert two == 2 * one
+    assert report["tot"] == "materialized"
+
+
+def test_row_identical_edit_stops_at_the_edited_stage(spark, sf_small, tmp_path):
+    """Early cutoff: an edit that leaves a materialized stage's rows
+    unchanged rewrites that stage only; its consumer keeps its key."""
+    cache = ArtifactCache(str(tmp_path))
+    p1 = Pipeline.from_spec(_spec(sf_small, where="l_quantity >= 0"))
+    v1 = sorted(tuple(r) for r in p1.run(spark, cache=cache)["agg"].collect())
+    p2 = Pipeline.from_spec(_spec(sf_small, where="l_quantity > -1"))
+    v2 = sorted(tuple(r) for r in p2.run(spark, cache=cache)["agg"].collect())
+    assert p2.last_run_report == {
+        "lineitem": "computed",
+        "filtered": "materialized",
+        "agg": "hit",
+    }
+    assert v2 == v1
+
+
+def test_targeted_walk_rebuilds_evicted_intermediate(spark, sf_small, tmp_path):
+    """A consumer's key needs its inputs' digests, so a targeted walk
+    rebuilds an evicted intermediate even when the target is a hit."""
+    import shutil
+
+    cache = ArtifactCache(str(tmp_path))
+    Pipeline.from_spec(_spec(sf_small)).run(spark, cache=cache, targets=["agg"])
+    shutil.rmtree(tmp_path / "filtered")
+    p = Pipeline.from_spec(_spec(sf_small))
+    p.run(spark, cache=cache, targets=["agg"])
+    assert p.last_run_report == {
+        "lineitem": "computed",
+        "filtered": "materialized",
+        "agg": "hit",
+    }
+
+
+def _jobs(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_load_reads_recorded_schema_without_a_job(spark, tmp_path):
+    """``load`` takes the manifest's schema (no inference job), and that
+    schema is the one inference would have read back."""
+    df = spark.sql(
+        "SELECT id, CAST(id AS DECIMAL(20,4)) AS d, array(id, id + 1) AS a,"
+        " named_struct('x', id, 'y', array(named_struct('z', 'q'))) AS s,"
+        " CAST(id AS VARCHAR(5)) AS vc, date'2020-01-01' AS dt FROM range(3)"
+    )
+    cache = ArtifactCache(str(tmp_path))
+    cache.materialize(spark, df, "st", "k1")
+    before = _jobs(spark)
+    loaded = cache.load(spark, "st", "k1")
+    assert _jobs(spark) == before
+    assert loaded.schema == spark.read.parquet(cache.path("st", "k1")).schema
+    assert sorted(loaded.collect()) == sorted(df.collect())
+
+
+def test_digest_is_order_free_and_value_sensitive(spark, tmp_path):
+    cache = ArtifactCache(str(tmp_path))
+    base = spark.sql("SELECT id, CAST(id * 3 AS STRING) AS s FROM range(200)")
+
+    def digest(df, key):
+        cache.materialize(spark, df, "d", key)
+        return cache.manifest(spark, "d", key)["digest"]
+
+    d0 = digest(base, "base")
+    assert digest(base.repartition(7), "repartitioned") == d0
+    assert digest(base.orderBy(F.col("id").desc()).coalesce(1), "reordered") == d0
+    changed = base.selectExpr("id", "IF(id = 17, 'x', s) AS s")
+    assert digest(changed, "changed") != d0
+    assert digest(base.limit(199), "dropped") != d0
+    # ``xxhash64`` skips nulls and chains array and struct elements
+    # without boundaries, so each pair below hashes alike under it. The
+    # second hash's per-column null flags separate the top-level columns;
+    # only its ``to_json`` terms tell the nested pairs apart.
+    pairs = {
+        "top_null": ("CAST(NULL AS INT) AS p, 5 AS q", "5 AS p, CAST(NULL AS INT) AS q"),
+        "adjacent_arrays": (
+            "array(1, 2) AS a, CAST(array() AS ARRAY<INT>) AS b",
+            "array(1) AS a, array(2) AS b",
+        ),
+        "nested_array": ("array(array(1), array(2)) AS n", "array(array(1, 2)) AS n"),
+        "nested_null": ("array(1, NULL) AS x", "array(NULL, 1) AS x"),
+        "struct_null": (
+            "named_struct('p', CAST(NULL AS INT), 'q', 1) AS s",
+            "named_struct('p', 1, 'q', CAST(NULL AS INT)) AS s",
+        ),
+    }
+    for name, (left, right) in pairs.items():
+        left_d = digest(spark.sql(f"SELECT id, {left} FROM range(3)"), f"{name}_l")
+        assert left_d != digest(spark.sql(f"SELECT id, {right} FROM range(3)"), f"{name}_r"), name
+
+
+def test_empty_and_map_frames_materialize_and_reload(spark, tmp_path):
+    cache = ArtifactCache(str(tmp_path))
+    empty = spark.sql("SELECT id FROM range(10) WHERE id < 0")
+    assert cache.materialize(spark, empty, "empty", "k").count() == 0
+    assert cache.has(spark, "empty", "k")
+    assert ArtifactCache(str(tmp_path)).load(spark, "empty", "k").count() == 0
+    # xxhash64 rejects maps and variants: the digest falls back to the key
+    maps = spark.sql("SELECT id, map('k', id) AS m FROM range(3)")
+    back = cache.materialize(spark, maps, "maps", "mk")
+    assert sorted(r.m["k"] for r in back.collect()) == [0, 1, 2]
+    assert cache.manifest(spark, "maps", "mk")["digest"] == "mk"
+    variants = spark.sql("SELECT id, parse_json(CAST(id AS STRING)) AS v FROM range(3)")
+    assert cache.materialize(spark, variants, "variants", "vk").count() == 3
+    assert cache.manifest(spark, "variants", "vk")["digest"] == "vk"
+
+
 def test_unknown_target_raises_clear_error(spark, sf_small):
     p = Pipeline.from_spec(
         {"stages": {"orders": {"type": "source", "table": "orders", "sf_dir": sf_small}}}

@@ -31,7 +31,7 @@ LOG_DIR = "/tmp/spark-events-r15"
 def get_profiling_spark():
     from pyspark.sql import SparkSession
 
-    from pipetree_spark.session import ENGINE_CONFS, default_parallelism
+    from pipetree_spark.session import ENGINE_CONFS, default_driver_memory, default_parallelism
 
     os.makedirs(LOG_DIR, exist_ok=True)
     cores = default_parallelism()
@@ -39,7 +39,7 @@ def get_profiling_spark():
         SparkSession.builder.appName("pipetree-spark-profile")
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
-        .config("spark.driver.memory", os.environ.get("PIPETREE_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.eventLog.enabled", "true")
